@@ -268,7 +268,9 @@ def guarded_time_df(
         s0 = cpu_steal_snapshot()
         ts = time_df(spark, build, runs=runs)
         st = cpu_steal_pct(s0, cpu_steal_snapshot())
-        if best_ts is None or (st or 0.0) < (best_steal or 0.0):
+        # an attempt whose steal could not be read never replaces a
+        # measured one: keeping it would drop the stamp
+        if best_ts is None or (st is not None and st < best_steal):
             best_ts, best_steal = ts, st
         if st is None or st <= STEAL_RETRY_PCT:
             break

@@ -37,7 +37,7 @@ from slowlog2clickhouse_spark.registry import op
 from slowlog2clickhouse_spark.sources.slowlog import (
     BOOL_METRICS,
     EVENT_SCHEMA,
-    parse_record,
+    event_rows,
     parse_slowlog,
     read_slowlog_records,
 )
@@ -125,7 +125,7 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"SELECT record_len, head FROM read_parquet('{GOLDEN_RECORDS}')",
 )
 def scan_text_multiline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-line record assembly via lineSep='\\n# Time: ' — the
+    """Multi-line record assembly via lineSep=RECORD_DELIM — the
     reference parser's record boundary ([go-mysql] log/slow/parser.go
     state machine [R:H]) pushed down into the text source, so splits
     align with records and the scan parallelizes at 100 TB. Oracle =
@@ -182,10 +182,7 @@ def udtf_parse_slowlog(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType=EVENT_SCHEMA)
     class ParseSlowlog:
         def eval(self, rec: str):
-            if rec and rec.strip():
-                d = parse_record(rec)
-                if d is not None:  # pure-preamble chunk → no event
-                    yield tuple(d[f.name] for f in EVENT_SCHEMA.fields)
+            yield from event_rows([(rec, 0)])
 
     spark.udtf.register("parse_slowlog_udtf", ParseSlowlog)
     records = read_slowlog_records(spark, FIXTURE_LOG)
@@ -515,7 +512,7 @@ def scan_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_slowlog_pyds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The slow-log format as a REGISTERED Spark data source
     (`spark.read.format("slowlog")`) via the Spark 4 Python Data
-    Source API — same parse_record state machine as the mapInPandas
+    Source API — same record core as the mapInPandas
     reader, one partition per log file. tests/test_slowlog.py pins
     event-for-event equality between both integration surfaces over
     the whole fixture corpus (directory read, one partition per file);

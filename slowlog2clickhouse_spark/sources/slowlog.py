@@ -6,12 +6,16 @@ SURVEY.md §0): where the reference walks lines char-by-char in a
 goroutine and emits events over a channel, we
 
 1. assemble records at the SOURCE by splitting the text on the
-   record-header delimiter ``\\n# Time: `` (``spark.read.text`` with a
+   record-header delimiter ``RECORD_DELIM`` (``spark.read.text`` with a
    custom ``lineSep`` — stays DataFrame-native, and file splits land on
    record boundaries so the scan parallelizes cleanly at 100 TB), then
 2. parse each record to a typed row inside an Arrow-batched
    ``mapInPandas`` (regex-bound Python, ~one pass per record; no
    driver-side loops, no RDDs).
+
+Every surface shares ``split_records``, ``parse_records`` and
+``parse_events`` (see sources/slowlog_datasource.py for the six
+surfaces and their ``record_no`` contracts).
 
 Output schema follows FIXTURES.md §2 (the reference's ``log.Event``
 widened to typed nullable columns, with unrecognized ``# Key: value``
@@ -22,8 +26,9 @@ hatch as the reference's metric maps).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from datetime import datetime, timezone
+from itertools import repeat
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -31,6 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 RECORD_DELIM = "\n# Time: "
+_HEAD = RECORD_DELIM[1:]  # a record's first line starts with this
+_DELIM_B = RECORD_DELIM.encode()
+_HEAD_B = _HEAD.encode()
 
 TIME_METRICS = (
     "query_time",
@@ -137,7 +145,8 @@ _KNOWN_EXACT["InnoDB_queue_wait"] = ("time", "innodb_queue_wait")
 _KNOWN_EXACT["InnoDB_pages_distinct"] = ("number", "innodb_pages_distinct")
 _KNOWN_EXACT["QC_Hit"] = ("bool", "qc_hit")
 
-_TEMPLATE = {f.name: None for f in EVENT_SCHEMA.fields}
+_FIELDS = [f.name for f in EVENT_SCHEMA.fields]
+_TEMPLATE = dict.fromkeys(_FIELDS)
 
 # server preamble lines — written at startup and again after FLUSH
 # LOGS / rotation, they are NOT events and must never reach the query
@@ -181,8 +190,8 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
     the chunk carried no timestamp and no recognized header at all —
     i.e. it was pure preamble, not a query record.
     """
-    if rec.startswith("# Time: "):
-        rec = rec[len("# Time: ") :]
+    if rec.startswith(_HEAD):
+        rec = rec[len(_HEAD) :]
     ev: dict = dict(_TEMPLATE)
     ev["record_no"] = record_no
     ev["admin"] = False
@@ -283,10 +292,63 @@ def parse_record(rec: str, record_no: int = 0) -> dict | None:
     return ev
 
 
+def split_records(buf: bytes) -> Iterator[tuple[int, str]]:
+    """Raw log bytes → ``(byte_offset in buf, record)`` — the Python
+    twin of the JVM ``lineSep`` split; the first record keeps any
+    preamble. Splitting bytes before decoding each record gives the
+    same text as decoding first: ``\\n`` never occurs inside a UTF-8
+    sequence, so no replaced sequence straddles a boundary."""
+    if not buf:
+        return
+    off = 0
+    for i, part in enumerate(buf.split(_DELIM_B)):
+        rec = part if i == 0 else _HEAD_B + part
+        yield off, rec.decode("utf-8", errors="replace")
+        off += len(rec) + 1  # +1: the \n the split consumed
+
+
+def parse_records(pairs: Iterable[tuple[str, int | None]]) -> Iterator[dict]:
+    """``(record, record_no)`` pairs → event dicts of the records that
+    carry one — the ONLY loop that calls ``parse_record``."""
+    for rec, record_no in pairs:
+        if rec and (ev := parse_record(rec, record_no)) is not None:
+            yield ev
+
+
+def event_rows(pairs: Iterable[tuple[str, int]], extra: tuple = ()) -> Iterator[tuple]:
+    """``parse_records`` as EVENT_SCHEMA-ordered tuples (+ ``extra``
+    columns) — the row shape of the Python data sources and the UDTF."""
+    for ev in parse_records(pairs):
+        yield tuple(ev[name] for name in _FIELDS) + extra
+
+
+def _event_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    for pdf in batches:
+        nos = pdf["record_no"].tolist() if "record_no" in pdf else repeat(None)
+        events = list(parse_records(zip(pdf["value"], nos)))
+        out = pd.DataFrame(events, columns=_FIELDS)
+        out["ts"] = pd.to_datetime(out["ts"])
+        yield out
+
+
+def parse_events(raw: DataFrame) -> DataFrame:
+    """Raw records (``value`` [, ``record_no``]) → typed events: the one
+    parse stage of the lineSep batch and stream readers. ``record_no``
+    comes from the input column, NULL when there is none.
+
+    Real logs carry binary garbage inside statements (blob inserts,
+    truncated multibyte chars); Spark's text source passes the raw
+    bytes through, but the Arrow boundary into mapInPandas REQUIRES
+    valid UTF-8 — the encode/decode round-trip substitutes U+FFFD
+    JVM-side (documented divergence: the reference reads raw bytes)."""
+    raw = raw.withColumn("value", F.decode(F.encode("value", "UTF-8"), "UTF-8"))
+    return raw.mapInPandas(_event_batches, EVENT_SCHEMA)
+
+
 def read_slowlog_records(spark: SparkSession, path: str) -> DataFrame:
     """Raw multi-line records, one row each (op: scan_text_multiline).
 
-    ``lineSep='\\n# Time: '`` makes the text source split the file at
+    ``lineSep=RECORD_DELIM`` makes the text source split the file at
     record headers — each input split starts at a record boundary, so
     the scan is parallel and needs no cross-partition stitching.
     """
@@ -304,28 +366,11 @@ def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
     deterministic — a per-batch ``enumerate`` restarts at 0 in every
     Arrow batch and is neither.
     """
-    raw = read_slowlog_records(spark, path).withColumn(
-        "record_no", F.monotonically_increasing_id()
+    return parse_events(
+        read_slowlog_records(spark, path).withColumn(
+            "record_no", F.monotonically_increasing_id()
+        )
     )
-    # real logs carry binary garbage inside statements (blob inserts,
-    # truncated multibyte chars); Spark's text source passes the raw
-    # bytes through, but the Arrow boundary into mapInPandas REQUIRES
-    # valid UTF-8 — the encode/decode round-trip substitutes U+FFFD
-    # JVM-side (documented divergence: the reference reads raw bytes)
-    raw = raw.withColumn("value", F.decode(F.encode("value", "UTF-8"), "UTF-8"))
-
-    def chunk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                ev
-                for rec, rno in zip(pdf["value"], pdf["record_no"])
-                if rec.strip() and (ev := parse_record(rec, int(rno))) is not None
-            ]
-            out = pd.DataFrame(rows, columns=[f.name for f in EVENT_SCHEMA.fields])
-            out["ts"] = pd.to_datetime(out["ts"])
-            yield out
-
-    return raw.mapInPandas(chunk, EVENT_SCHEMA)
 
 
 def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:

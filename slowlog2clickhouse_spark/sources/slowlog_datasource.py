@@ -6,10 +6,25 @@ Python format plug into the planner like parquet/csv do:
     spark.dataSource.register(SlowlogDataSource)
     spark.read.format("slowlog").load("/var/log/mysql/slow*.log")
 
-This wraps the exact same ``parse_record`` state machine as the
-mapInPandas source (sources/slowlog.py) — one parser, two integration
-surfaces — and the pytest golden test pins that both produce identical
-events for the fixture corpus.
+One record core, six surfaces. sources/slowlog.py owns the record
+path — ``split_records`` (bytes → ``(byte_offset, record)``),
+``parse_records`` (the only loop calling ``parse_record``) and
+``parse_events`` (the one mapInPandas stage) — and each surface
+differs only in the ``record_no`` it passes in:
+
+  * lineSep batch (``parse_slowlog``)        — ``monotonically_increasing_id()``;
+  * lineSep stream (``read_slowlog_stream``) — NULL (no stable global
+                                               ordinal for an unbounded tail);
+  * Python data source batch (this module)   — per-file record ordinal;
+  * single-file tail (``slowlog`` stream)    — running ordinal across
+                                               batches, counting every
+                                               record, preamble-only ones too;
+  * fleet tail (``slowlog_tail_multi``)      — byte offset within the file
+                                               incarnation;
+  * UDTF (``udtf_parse_slowlog``)            — 0.
+
+The pytest golden tests pin that the data source and the lineSep
+reader produce identical events for the fixture corpus.
 
 Scale: ``partitions()`` returns one InputPartition per input file, so a
 directory of rotated logs fans out across executors exactly like the
@@ -40,23 +55,18 @@ near-identical bugs in two parallel implementations; now there is one):
                             guard, then best-effort salvage of the
                             start incarnation's unread tail.
 
-The two reader classes remain as thin shells because their OFFSET
-CONTRACTS genuinely differ and cannot be unified without breaking one:
-the single-file tail carries a running record ordinal (``rno``) and a
-``gen`` counter in its offset — stateful by design, so ``record_no``
-is a never-resetting sequence over the whole tail — while the fleet
-reader is STATELESS (``latestOffset()`` receives no start offset after
-a committed restart, so nothing cross-batch can live in its offsets)
-and ``record_no`` is therefore the record's byte offset within its
-file incarnation. A fleet-of-1 cannot express the single reader's
-ordinal contract; the single reader cannot express per-file fan-out.
-Rotation handling, the part that was duplicated, is shared.
+The two tail reader classes stay separate because their offset
+contracts differ: the single-file tail carries ``rno`` and ``gen`` in
+its offset (stateful), while the fleet reader is stateless
+(``latestOffset()`` gets no start offset after a committed restart),
+hence the two ``record_no`` contracts above.
 """
 
 from __future__ import annotations
 
 import glob
 import hashlib
+import itertools
 import os
 from typing import Iterator
 
@@ -69,20 +79,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-from slowlog2clickhouse_spark.sources.slowlog import EVENT_SCHEMA, parse_record
-
-_FIELDS = [f.name for f in EVENT_SCHEMA.fields]
-
-
-def _records(text: str) -> Iterator[str]:
-    """Split a slow-log file into per-event chunks on the record
-    boundary marker, mirroring the lineSep-split reader: the first
-    chunk keeps any preamble (parse_record skips it), later chunks
-    start at their `# Time: ` value."""
-    parts = text.split("\n# Time: ")
-    yield parts[0]
-    for p in parts[1:]:
-        yield "# Time: " + p
+from slowlog2clickhouse_spark.sources.slowlog import (
+    EVENT_SCHEMA,
+    RECORD_DELIM,
+    event_rows,
+    split_records,
+)
 
 
 class SlowlogReader(DataSourceReader):
@@ -100,14 +102,8 @@ class SlowlogReader(DataSourceReader):
 
     def read(self, partition: InputPartition):
         with open(partition.value, "rb") as fh:
-            text = fh.read().decode("utf-8", errors="replace")
-        for i, rec in enumerate(_records(text)):
-            ev = parse_record(rec, i)
-            if ev is not None:
-                yield tuple(ev[name] for name in _FIELDS)
-
-
-_BOUNDARY = b"\n# Time: "
+            buf = fh.read()
+        yield from event_rows((rec, i) for i, (_, rec) in enumerate(split_records(buf)))
 
 
 def _file_ino(path: str) -> int:
@@ -430,19 +426,20 @@ def _head_hash(path: str, n: int) -> str:
 
 
 def _last_boundary(path: str, size: int) -> int:
-    """Byte index of the LAST ``\\n# Time: `` in ``path[:size]``, or -1.
+    """Byte index of the LAST ``RECORD_DELIM`` in ``path[:size]``, or -1.
     Backward block scan from EOF with boundary-length overlap — O(tail
     block), not O(file): a long-running tail must not re-scan the whole
     multi-GB log every trigger just to find the newest record header."""
+    delim = RECORD_DELIM.encode()
     blk = 1 << 16
-    ov = len(_BOUNDARY) - 1
+    ov = len(delim) - 1
     end = size
     with open(path, "rb") as fh:
         while end > 0:
             lo = max(0, end - blk)
             fh.seek(lo)
             buf = fh.read(min(end - lo + ov, size - lo))
-            i = buf.rfind(_BOUNDARY)
+            i = buf.rfind(delim)
             if i >= 0:
                 return lo + i
             end = lo
@@ -606,21 +603,13 @@ class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
         return {"rno": 0, "gen": 0, **st}
 
     def _parse(self, chunk: bytes, rno0: int):
-        if not chunk:
-            return iter([]), 0
-        text = chunk.decode("utf-8", errors="replace")
-        rows = []
-        n = 0
-        for rec in _records(text):
-            ev = parse_record(rec, rno0 + n)
-            n += 1
-            if ev is not None:
-                rows.append(tuple(ev[name] for name in _FIELDS))
-        return iter(rows), n
+        """Rows of ``chunk`` numbered from ``rno0``, and its record
+        count (preamble-only records included). Materialized: Spark's
+        prefetch cache copies the iterator; a generator can't be."""
+        recs = [rec for _, rec in split_records(chunk)]
+        return iter(list(event_rows(zip(recs, itertools.count(rno0))))), len(recs)
 
     def read(self, start: dict):
-        import itertools
-
         rno0 = int(start["rno"])
         e = _stamp_file_cached(self.path, self._stat_cache, self._HEAD_BYTES)
         if e is None:
@@ -686,8 +675,6 @@ class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
         its rows are dropped — fewer rows than the original batch,
         never wrong ones; the stored sib_rn keeps the surviving
         rows' ordinals deterministic."""
-        import itertools
-
         pos, stop = int(start["pos"]), int(end["pos"])
         pre = iter([])
         sib_rn = 0
@@ -760,9 +747,8 @@ class SlowlogTailStreamReader(SimpleDataSourceStreamReader):
 # grows with it) — fine for uniqueness (record_no never repeats
 # within an incarnation), but an idempotent sink keying on the triple
 # should still prefer content keys when its input may contain such
-# embryonic files. The single-file tail's record_no is a
-# never-resetting running ordinal; consumers switching between the
-# two readers must not assume the contracts match.
+# embryonic files. The two tail readers' record_no contracts differ
+# (module docstring).
 MULTI_EVENT_SCHEMA = StructType(
     list(EVENT_SCHEMA.fields)
     + [
@@ -770,24 +756,6 @@ MULTI_EVENT_SCHEMA = StructType(
         StructField("incarnation", StringType()),
     ]
 )
-
-
-def _parse_bytes(buf: bytes, base: int, path: str, inc: str = ""):
-    """Parse a byte range into event tuples. record_no is the record's
-    BYTE OFFSET within its file incarnation — unlike the single-file
-    tail's running ordinal, a byte offset is derivable from the
-    partition alone (no cross-batch counter in the offsets), monotonic
-    per incarnation, and stable under replay. It RESETS on rotation —
-    ``inc`` (the incarnation head stamp, see MULTI_EVENT_SCHEMA)
-    disambiguates the reset."""
-    parts = buf.split(_BOUNDARY)
-    cur = 0
-    for i, part in enumerate(parts):
-        rec = part if i == 0 else b"# Time: " + part
-        ev = parse_record(rec.decode("utf-8", errors="replace"), base + cur)
-        if ev is not None:
-            yield tuple(ev[name] for name in _FIELDS) + (path, inc)
-        cur += len(rec) + 1  # +1: the \n the boundary split consumed
 
 
 _ZERO_FILE = {"pos": 0, "head": "", "head_n": 0}
@@ -1103,6 +1071,9 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: InputPartition):
+        """record_no is the record's byte offset within its file
+        incarnation: derivable from the partition alone and stable
+        under replay (see MULTI_EVENT_SCHEMA)."""
         v = partition.value
         sib_buf, sib_base, live_buf, live_base, _same = _read_planned_range(v)
         # the emitted incarnation stamp carries BOTH legs of the
@@ -1116,14 +1087,19 @@ class SlowlogMultiTailStreamReader(DataSourceStreamReader):
         if sib_buf:
             # salvage leg: bytes belong to the START incarnation
             inc = f"{v.get('sib_head', '')}@{int(v.get('sib_ino', 0))}"
-            yield from _parse_bytes(sib_buf, sib_base, v["path"], inc)
+            yield from self._parse(sib_buf, sib_base, v["path"], inc)
         if live_buf:
             # live leg: bytes belong to the END incarnation — which,
             # when the same-incarnation guard fired, is also the start
             # incarnation (stamps agree on this very handle); the end
             # stamp is the fresher (larger head_n) of the two either way
             inc = f"{v.get('head', '')}@{int(v.get('ino', 0))}"
-            yield from _parse_bytes(live_buf, live_base, v["path"], inc)
+            yield from self._parse(live_buf, live_base, v["path"], inc)
+
+    @staticmethod
+    def _parse(buf: bytes, base: int, path: str, inc: str) -> Iterator[tuple]:
+        pairs = ((rec, base + off) for off, rec in split_records(buf))
+        return event_rows(pairs, (path, inc))
 
     def commit(self, end: dict) -> None:
         pass  # offsets carry everything; nothing to clean up

@@ -20,11 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from slowlog2clickhouse_spark.registry import op
-from slowlog2clickhouse_spark.sources.slowlog import (
-    EVENT_SCHEMA,
-    RECORD_DELIM,
-    parse_record,
-)
+from slowlog2clickhouse_spark.sources.slowlog import RECORD_DELIM, parse_events
 
 _counter = itertools.count()
 
@@ -50,7 +46,7 @@ TAIL_DRAIN_TRIGGER = "{} milliseconds".format(
 # tail op so the hold-back boundary and this literal can never drift
 # apart (r14 fourth-review find)
 _SENTINEL = (
-    "\n# Time: 2030-01-01T00:00:00.000000Z\n"
+    RECORD_DELIM + "2030-01-01T00:00:00.000000Z\n"
     "# Query_time: 0.000001  Lock_time: 0.000000 "
     "Rows_sent: 0  Rows_examined: 0\n"
 )
@@ -61,7 +57,8 @@ def _fixture_cuts(txt: str, n: int) -> list:
     contiguous segments (the rotation/fleet split every tail op uses)."""
     import re
 
-    starts = [m.start() for m in re.finditer(r"(?m)^# Time: ", txt)]
+    head = re.compile("(?m)^" + re.escape(RECORD_DELIM[1:]))
+    starts = [m.start() for m in head.finditer(txt)]
     cuts = [starts[(len(starts) * i) // n] for i in range(1, n)]
     return [0] + cuts + [len(txt)]
 
@@ -97,10 +94,11 @@ def read_slowlog_stream(
     Streaming file sources require a DIRECTORY; a single-file path is
     split into (dir, pathGlobFilter). ``max_files_per_trigger`` caps
     files per micro-batch (the rotated-log drain shape: one batch per
-    rotation segment)."""
+    rotation segment). ``record_no`` is NULL: a per-batch enumerate
+    collides across micro-batches, and there is no stable global
+    ordinal for an unbounded tail — downstream streaming aggs never
+    key or tiebreak on it."""
     import os
-
-    import pandas as pd
 
     directory, glob = (path, "*") if os.path.isdir(path) else os.path.split(path)
     reader = spark.readStream.option("lineSep", RECORD_DELIM).option(
@@ -108,27 +106,7 @@ def read_slowlog_stream(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.text(directory)
-    # UTF-8 sanitize before the Arrow boundary (see sources/slowlog.py)
-    raw = raw.withColumn("value", F.decode(F.encode("value", "UTF-8"), "UTF-8"))
-
-    def chunk(batches):
-        for pdf in batches:
-            # record_no stays NULL on the streaming path: a per-batch
-            # enumerate collides across micro-batches, and there is no
-            # stable global ordinal for an unbounded tail — downstream
-            # streaming aggs never key or tiebreak on it
-            rows = [
-                ev
-                for r in pdf["value"]
-                if r.strip() and (ev := parse_record(r)) is not None
-            ]
-            out = pd.DataFrame(rows, columns=[f.name for f in EVENT_SCHEMA.fields])
-            out["ts"] = pd.to_datetime(out["ts"])
-            out["record_no"] = None
-            yield out
-
-    return raw.mapInPandas(chunk, EVENT_SCHEMA)
+    return parse_events(reader.text(directory))
 
 
 def stream_classes(events: DataFrame, mode: str = "routed") -> DataFrame:

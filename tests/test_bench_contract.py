@@ -16,6 +16,8 @@ import json
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import bench  # noqa: E402
@@ -95,15 +97,27 @@ def test_final_line_fits_budget_with_full_steal_map():
     }
 
 
-def test_steal_retry_keeps_lower_steal_attempt(monkeypatch):
+@pytest.mark.parametrize(
+    "steal_windows, kept_ts, kept_steal",
+    [
+        # attempt 2 clean: keep it
+        ([30.0, 2.0], [1.0, 1.0, 1.0], 2.0),
+        # attempt 2's steal unreadable: keep the measured attempt 1
+        ([30.0, None], [9.0, 9.0, 9.0], 30.0),
+    ],
+    ids=["clean_retry", "unmeasured_retry"],
+)
+def test_steal_retry_keeps_lower_steal_attempt(
+    monkeypatch, steal_windows, kept_ts, kept_steal
+):
     """The bounded per-query retry (VERDICT r16 #1) must (a) re-run a
     query whose window exceeded STEAL_RETRY_PCT, (b) keep the attempt
-    with the LOWER steal stamp — never selecting on the time itself —
-    and (c) stop at STEAL_RETRY_MAX attempts."""
+    with the LOWER steal stamp — never selecting on the time itself,
+    and never trading a measured attempt for one whose steal could not
+    be read — and (c) stop at STEAL_RETRY_MAX attempts."""
     calls = {"n": 0}
-    # attempt 1: contaminated (30% steal), slow; attempt 2: clean, fast
+    # attempt 1: contaminated (30% steal), slow; attempt 2: fast
     timings = [[9.0, 9.0, 9.0], [1.0, 1.0, 1.0]]
-    steal_windows = [30.0, 2.0]
 
     def fake_time_df(spark, build, runs=3):
         i = calls["n"]
@@ -125,8 +139,8 @@ def test_steal_retry_keeps_lower_steal_attempt(monkeypatch):
         None, None, 3, loads, "q_x", steals, retried
     )
     assert calls["n"] == bench.STEAL_RETRY_MAX == 2
-    assert ts == [1.0, 1.0, 1.0]
-    assert steals["q_x"] == 2.0
+    assert ts == kept_ts
+    assert steals["q_x"] == kept_steal
     assert retried == ["q_x"]
 
 

@@ -251,8 +251,8 @@ def test_no_unbounded_global_window(built):
 # ---------------------------------------------------------------------------
 # r17 (VERDICT r16 #2): pin the r16/r17 optimization plan shapes so the
 # shuffle/scan/broadcast wins can't silently regress. Counts are of the
-# formatted-plan node list (the same greps the r16 audit ran against
-# plans/r16/*_after.txt).
+# formatted-plan node list (the same greps the r16 audit ran against its
+# plan dumps; plans/r17/ holds the current dumps).
 # ---------------------------------------------------------------------------
 
 

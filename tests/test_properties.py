@@ -12,7 +12,11 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from slowlog2clickhouse_spark.functions.fingerprint import digest_py, fingerprint_py
-from slowlog2clickhouse_spark.sources.slowlog import parse_record
+from slowlog2clickhouse_spark.sources.slowlog import (
+    parse_record,
+    parse_records,
+    split_records,
+)
 
 # SQL-ish text: identifiers, numbers, quoted strings, operators
 sql_atom = st.one_of(
@@ -84,17 +88,24 @@ def test_parser_metric_roundtrip(qt, rows, flag, db):
     assert ev["query"] == "SELECT 1"
 
 
-@given(st.text(max_size=400))
+@given(
+    st.text(max_size=400),
+    # byte garbage, several records' worth once joined on the delimiter
+    st.lists(st.binary(max_size=100), max_size=5).map(b"\n# Time: ".join),
+)
 @settings(max_examples=300, deadline=None)
-def test_parser_never_crashes(garbage):
+def test_parser_never_crashes(garbage, garbage_bytes):
     """Any input yields a well-formed event dict — or None for chunks
     with no timestamp and no recognized header (preamble suppression) —
-    never an exception."""
-    ev = parse_record(garbage)
-    if ev is None:
-        return
-    assert set(ev) >= {"ts", "query", "admin", "user", "host", "db"}
-    assert isinstance(ev["admin"], bool)
+    never an exception; the same holds for arbitrary bytes through the
+    shared splitter and record loop."""
+    evs = [parse_record(garbage)]
+    evs += parse_records((rec, off) for off, rec in split_records(garbage_bytes))
+    for ev in evs:
+        if ev is None:
+            continue
+        assert set(ev) >= {"ts", "query", "admin", "user", "host", "db"}
+        assert isinstance(ev["admin"], bool)
 
 
 @given(
@@ -125,10 +136,14 @@ def test_first_fit_decreasing_invariants(sizes, budget):
 
 @given(
     st.lists(
-        st.text(
-            alphabet=string.ascii_letters + string.digits + " ;\n#",
-            min_size=1,
-            max_size=120,
+        st.one_of(
+            st.text(
+                alphabet=string.ascii_letters + string.digits + " ;\n#",
+                min_size=1,
+                max_size=120,
+            ).map(str.encode),
+            # non-UTF-8 garbage: truncated multibyte chars, stray bytes
+            st.binary(min_size=1, max_size=120),
         ),
         min_size=1,
         max_size=20,
@@ -136,18 +151,23 @@ def test_first_fit_decreasing_invariants(sizes, budget):
 )
 @settings(max_examples=200)
 def test_datasource_record_split_roundtrip(bodies):
-    """The Python-datasource splitter must produce exactly one chunk
-    per record and preserve every byte: joining N records with the
-    '\\n# Time: ' boundary and re-splitting yields the originals."""
-    from slowlog2clickhouse_spark.sources.slowlog_datasource import _records
-
-    recs = [f"# Time: 2024-01-01T00:00:0{i % 10}Z\n{b}" for i, b in enumerate(bodies)]
+    """The shared splitter must produce exactly one chunk per record
+    and preserve every byte: joining N records with the '\\n# Time: '
+    boundary and re-splitting yields the originals, each decoded on
+    its own, and the buffer at each yielded offset starts with that
+    record's bytes (the fleet tail's byte-offset record_no contract)."""
+    recs = [
+        b"# Time: 2024-01-01T00:00:0%dZ\n" % (i % 10) + b
+        for i, b in enumerate(bodies)
+    ]
     # a record body must not itself contain the boundary marker
-    recs = [r for r in recs if "\n# Time: " not in r[8:]]
-    text = "\n# Time: ".join(r[8:] if i else r for i, r in enumerate(recs))
-    got = list(_records(text))
+    recs = [r for r in recs if b"\n# Time: " not in r[8:]]
+    buf = b"\n".join(recs)
+    got = list(split_records(buf))
     assert len(got) == len(recs)
-    assert got == recs
+    for (off, text), rec in zip(got, recs):
+        assert buf[off : off + len(rec)] == rec
+        assert text == rec.decode("utf-8", errors="replace")
 
 
 # ---------------------------------------------------------------------------

@@ -912,3 +912,50 @@ def test_pctl_hist_error_gate_all_within_bound(spark, sf_dir):
         assert r["p50_ratio"] >= 0.99, r
     med = statistics.median(r["p95_ratio"] for r in rows)
     assert 1.0 <= med <= 2.0, med
+
+
+def test_one_record_path_in_package():
+    """Structural pin: the record splitter and the record→event loop
+    live in sources/slowlog.py alone. No other package module may call
+    ``parse_record`` (route through ``parse_records``) or spell the
+    ``# Time: `` record delimiter in code (use ``RECORD_DELIM``);
+    docstrings may still mention it."""
+    import ast
+    import pathlib
+
+    import slowlog2clickhouse_spark
+
+    root = pathlib.Path(slowlog2clickhouse_spark.__file__).parent
+    core = root / "sources" / "slowlog.py"
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        if path == core:
+            continue
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and ast.get_docstring(node, clean=False) is not None
+        }
+        for node in ast.walk(tree):
+            name = None
+            if isinstance(node, ast.Name):
+                name = node.id
+            elif isinstance(node, ast.Attribute):
+                name = node.attr
+            elif isinstance(node, ast.alias):
+                name = node.name
+            where = f"{path.relative_to(root)}:{getattr(node, 'lineno', '?')}"
+            if name == "parse_record":
+                bad.append(f"{where} uses parse_record")
+            if isinstance(node, ast.Constant) and id(node) not in docstrings:
+                value = node.value
+                if isinstance(value, bytes):
+                    value = value.decode("latin-1")
+                if isinstance(value, str) and "# Time: " in value:
+                    bad.append(f"{where} hard-codes the delimiter")
+    assert not bad, bad

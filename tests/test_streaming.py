@@ -1368,8 +1368,8 @@ def test_multi_tail_reshard_contract(spark, tmp_path):
       (d) fresh-checkpoint migration: the new n'=4 shards still cover
           the fleet disjointly and their union equals the unsharded
           read."""
+    from slowlog2clickhouse_spark.sources.slowlog import _FIELDS
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        _FIELDS,
         SlowlogMultiTailStreamReader,
     )
 
@@ -1470,8 +1470,8 @@ def test_multi_tail_reshard_any_width(spark, tmp_path):
     else fresh) deduped on (source_file, incarnation, record_no)
     equals the unsharded golden. Non-divisor widths are the hard case:
     files move between shards in BOTH directions at once."""
+    from slowlog2clickhouse_spark.sources.slowlog import _FIELDS
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        _FIELDS,
         SlowlogMultiTailStreamReader,
     )
 
@@ -1541,8 +1541,8 @@ def test_multi_tail_reshard_real_checkpoints(spark, tmp_path):
     era-1 bytes) but nothing was lost, and the retained streams
     resumed from their committed offsets (their sinks carry each
     still-owned file's era-2 record exactly once)."""
+    from slowlog2clickhouse_spark.sources.slowlog import _FIELDS
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        _FIELDS,
         SlowlogMultiTailStreamReader,
         register,
     )
@@ -1621,8 +1621,8 @@ def test_multi_tail_incarnation_disambiguates_record_no(spark, tmp_path):
     same planned partitions yields identical stamps."""
     import shutil
 
+    from slowlog2clickhouse_spark.sources.slowlog import _FIELDS
     from slowlog2clickhouse_spark.sources.slowlog_datasource import (
-        _FIELDS,
         SlowlogMultiTailStreamReader,
     )
 
