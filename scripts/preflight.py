@@ -14,6 +14,8 @@ exit if any of the registration/scale/robustness contracts fail:
                                no row-Python-UDF hot paths, no
                                unbounded global windows
   * tests/test_empty_inputs.py — every op survives an empty table
+  * tests/test_slowlog.py structural pins (AST only, no Spark) — one
+                               record path, one class-event stage
 
 Usage:  python scripts/preflight.py        (exit 0 = safe to commit)
         python scripts/preflight.py --full (also run the whole suite)
@@ -29,6 +31,8 @@ GATES = [
     "tests/test_coverage.py",
     "tests/test_plan_lint.py",
     "tests/test_empty_inputs.py",
+    "tests/test_slowlog.py::test_one_record_path_in_package",
+    "tests/test_slowlog.py::test_one_class_event_stage_in_package",
 ]
 
 

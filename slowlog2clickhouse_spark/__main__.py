@@ -240,13 +240,10 @@ def cmd_digest(args) -> int:
         ingest_slowlog,
         top_digests,
     )
-    from slowlog2clickhouse_spark.sources.slowlog import (
-        parse_slowlog,
-        with_fingerprint,
-    )
+    from slowlog2clickhouse_spark.sources.slowlog import class_events, parse_slowlog
 
     spark = _get_spark()
-    events = with_fingerprint(parse_slowlog(spark, args.log), mode=args.fingerprint)
+    events = class_events(parse_slowlog(spark, args.log), mode=args.fingerprint)
     g = (
         aggregate_global(events)
         .agg(

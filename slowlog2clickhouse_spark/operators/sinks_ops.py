@@ -57,8 +57,8 @@ def sink_jdbc_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slowlog2clickhouse_spark.sources.slowlog import (
         NUMBER_METRICS,
         TIME_METRICS,
+        class_events,
         parse_slowlog,
-        with_fingerprint,
     )
 
     classes = ingest_slowlog(spark, FIXTURE_LOG)
@@ -70,10 +70,8 @@ def sink_jdbc_clickhouse(spark: SparkSession, sf_dir: str) -> DataFrame:
         qt_hist_bucket,
     )
 
-    ev = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin"))
-        & F.col("query").isNotNull()
-        & F.col("query_time").isNotNull()
+    ev = class_events(parse_slowlog(spark, FIXTURE_LOG)).where(
+        F.col("query_time").isNotNull()
     )
     hist_state = ev.select(
         F.col("digest"), qt_hist_bucket().alias("bucket")

@@ -37,7 +37,9 @@ from slowlog2clickhouse_spark.registry import op
 from slowlog2clickhouse_spark.sources.slowlog import (
     BOOL_METRICS,
     EVENT_SCHEMA,
+    class_events,
     event_rows,
+    event_tallies,
     parse_slowlog,
     read_slowlog_records,
 )
@@ -310,9 +312,8 @@ def slowlog_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-period stat battery beside the per-class rows — one GLOBAL
     row per minute over the fixture log."""
     from slowlog2clickhouse_spark.plans.pipeline import aggregate_global
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
 
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG))
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     return _driver_battery(aggregate_global(events, example_tiebreak="query"))
 
 
@@ -378,19 +379,7 @@ def slowlog_parse_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     events; here it is a one-row DataFrame a monitoring job can sink:
     totals of events, admin commands, unparseable (no ts), rate-limited
     sessions, and records carrying unknown `# Key:` pairs."""
-    ev = parse_slowlog(spark, FIXTURE_LOG)
-
-    def tally(cond):  # count_if with NULL-as-false (sum of all-NULL is NULL)
-        return F.coalesce(F.sum(cond.cast("long")), F.lit(0))
-
-    return ev.agg(
-        F.count("*").alias("n_events"),
-        tally(F.col("admin")).alias("n_admin"),
-        tally(F.col("ts").isNull()).alias("n_no_ts"),
-        tally(F.col("query").isNull()).alias("n_no_query"),
-        tally(F.col("rate_limit") > 1).alias("n_rate_limited"),
-        tally(F.size("extra_metrics") > 0).alias("n_extra_kv"),
-    )
+    return event_tallies(parse_slowlog(spark, FIXTURE_LOG))
 
 
 @op(
@@ -563,9 +552,7 @@ def qan_filter_dimensions(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, then a single partial-agg'd groupBy — at 100 TB the
     dimension fan-out is ×3 before aggregation, the shuffle is
     |dims × values|-sized."""
-    ev = parse_slowlog(spark, FIXTURE_LOG).where(
-        ~F.col("admin") & F.col("query").isNotNull()
-    )
+    ev = class_events(parse_slowlog(spark, FIXTURE_LOG))
     total = ev.agg(F.sum("query_time").alias("t"))
     pairs = ev.select(
         F.explode(
@@ -623,11 +610,7 @@ def qan_new_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse as the class pipeline; first-seen is a |digests|-row
     aggregate that broadcasts back. No raw-event row crosses a second
     shuffle."""
-    from slowlog2clickhouse_spark.plans.pipeline import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     dp = events.select(
         "digest", F.date_trunc("minute", F.col("ts")).alias("period_start")
     ).distinct()
@@ -687,11 +670,7 @@ def slowlog_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     event stream — identical shuffle shape to slowlog_classes; every
     metric is an int or round-recovered decimal sum, ratios computed
     once post-aggregation."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     lock_sum = F.round(F.coalesce(F.sum("lock_time"), F.lit(0.0)), 6)
     qt_sum = F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6)
     exam = F.coalesce(F.sum("rows_examined"), F.lit(0))
@@ -737,11 +716,7 @@ def slowlog_dimensions_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix costs no more than the per-digest rollup. Cardinality =
     |digests × active principals|, orders of magnitude below raw
     events."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     return events.groupBy("digest", "user", "host", "db").agg(
         F.count("*").alias("cnt"),
         F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6).alias(
@@ -783,11 +758,7 @@ def slowlog_load_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     over |digests| post-agg rows."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     per = events.groupBy("digest").agg(
         F.count("*").alias("cnt"),
         F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6).alias("qt_sum"),
@@ -838,11 +809,7 @@ def qan_digest_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle rows, not the raw event stream."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     w = W.partitionBy("digest").orderBy(
         F.col("query_time").desc_nulls_last(), F.col("query").desc()
     )
@@ -902,11 +869,7 @@ def slowlog_rate_adjusted(spark: SparkSession, sf_dir: str) -> DataFrame:
     slowlog_classes; the multiplier rides the aggregate as
     max(rate_limit) per class (a class is logged under one sampling
     config at a time)."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(
-        parse_slowlog(spark, FIXTURE_RATELIMIT_LOG)
-    ).where((~F.col("admin")) & F.col("query").isNotNull())
+    events = class_events(parse_slowlog(spark, FIXTURE_RATELIMIT_LOG))
     rl = F.coalesce(F.max("rate_limit"), F.lit(1))
     qt = F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6)
     return events.groupBy("digest").agg(
@@ -959,11 +922,7 @@ def slowlog_top_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same plan shape."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     tbl = F.lower(
         F.regexp_extract(F.col("fingerprint"), r"from ([a-z0-9_]+)", 1)
     )
@@ -1024,12 +983,8 @@ def qan_digest_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     size bounds basket_part_pairs. Top-20 over the tiny pair table."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin"))
-        & F.col("query").isNotNull()
-        & F.col("ts").isNotNull()
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG)).where(
+        F.col("ts").isNotNull()
     )
     dm = events.select(
         "digest", F.date_trunc("minute", "ts").alias("m")
@@ -1104,11 +1059,7 @@ def qan_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses once."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     sat = (F.col("query_time") <= 0.1).cast("long")
     tol = ((F.col("query_time") > 0.1) & (F.col("query_time") <= 0.4)).cast(
         "long"
@@ -1211,11 +1162,7 @@ def qan_workload_compress(spark: SparkSession, sf_dir: str) -> DataFrame:
     portable subset both engines split identically, verified
     list-for-list), one digest-keyed partial-agg'd shuffle. The ratio
     is bigint/bigint scalar division — IEEE-deterministic, unrounded."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     toks = F.regexp_extract_all("query", F.lit(_WORKLOAD_TOK_PAT), F.lit(0))
     not_comment = lambda x: ~(
         x.startswith("--") | x.startswith("#") | x.startswith("/*")
@@ -1294,11 +1241,7 @@ def qan_workload_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     state), one digest-keyed partial-agg'd shuffle, one 1-row grand-
     total broadcast. The sample RATE generalizes by widening the hash
     modulus; stratified-exact sampling lives in sample_stratified."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     hk = F.conv(
         F.substring(F.md5(F.concat(F.col("query"), F.col("ts").cast("string"))), 1, 4),
         16,
@@ -1371,11 +1314,7 @@ def slowlog_classes_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two digest-keyed partial-agg shuffles + one digest
     equi-join — in production the left side is a parquet/ClickHouse
     read of stored partials, not a recompute."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin")) & F.col("query").isNotNull()
-    )
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG))
     half = (
         F.unix_timestamp(F.date_trunc("minute", F.col("ts"))) % 2
     ).alias("half")
@@ -1513,12 +1452,8 @@ def slowlog_classes_incremental_pctl(spark: SparkSession, sf_dir: str) -> DataFr
     an addition-keyed shuffle of that tiny table, never a rescan of
     history. Quantile extraction is one bounded window over ≤40 rows
     per digest."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin"))
-        & F.col("query").isNotNull()
-        & F.col("query_time").isNotNull()
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG)).where(
+        F.col("query_time").isNotNull()
     )
     half = (
         F.unix_timestamp(F.date_trunc("minute", F.col("ts"))) % 2
@@ -1615,12 +1550,8 @@ def qan_pctl_hist_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the estimate side is the |digests × ≤40 buckets| histogram path."""
     from pyspark.sql import Window as W
 
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(parse_slowlog(spark, FIXTURE_LOG)).where(
-        (~F.col("admin"))
-        & F.col("query").isNotNull()
-        & F.col("query_time").isNotNull()
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG)).where(
+        F.col("query_time").isNotNull()
     )
     # lazy checkpoint: ev feeds BOTH the exact-rank branch and the
     # histogram branch — without it each branch re-runs the Arrow
@@ -1696,11 +1627,7 @@ def slowlog_classes_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     r14): the UDF's INPUT is masked to NULL for clean rows, so only
     flagged rows carry payload across the Python boundary,
     Arrow-batched, in one scan."""
-    from slowlog2clickhouse_spark.sources.slowlog import with_fingerprint
-
-    events = with_fingerprint(
-        parse_slowlog(spark, FIXTURE_LOG), mode="routed"
-    ).where((~F.col("admin")) & F.col("query").isNotNull())
+    events = class_events(parse_slowlog(spark, FIXTURE_LOG), "routed")
     return events.groupBy("digest").agg(
         F.count("*").alias("num_queries"),
         F.round(F.coalesce(F.sum("query_time"), F.lit(0.0)), 6).alias("qt_sum"),

@@ -813,6 +813,29 @@ _RECALL_DUCK = f"""
     """
 
 
+def _t3(cond=None):
+    """Top-3 ``(…, cand_id)`` structs per group by ``cos_sim DESC,
+    cand_id ASC`` — the order of the row_number window it replaced
+    (r17) and of the DuckDB oracle: NaN first (NaN is the largest
+    double), NULL last, -0.0 == 0.0, ties by cand_id. sort_array sorts
+    the struct ascending, so the key is (is NULL, is not NaN,
+    -cos_sim, cand_id). A sorted-list aggregate drops the window's
+    full partition sort, but it buffers every scored row of the group:
+    O(|candidates|) per probe, unlike the window's WindowGroupLimit.
+    ``cond``: collect_list drops NULLs, so when(cond, s) collects the
+    cond-subset in the SAME aggregate pass."""
+    c = F.col("cos_sim")
+    s = F.struct(
+        c.isNull().alias("null_last"),
+        (~F.isnan(c)).alias("nan_first"),
+        (-c).alias("nc"),
+        F.col("cand_id").alias("cand_id"),
+    )
+    return F.slice(
+        F.sort_array(F.collect_list(s if cond is None else F.when(cond, s))), 1, 3
+    )
+
+
 @op("ann_recall_eval", oracle=_RECALL_DUCK)
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@3 of the ANN variants (vec_knn_lsh, vec_knn_ivf and
@@ -825,8 +848,11 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ground truth is the one brute-force pass you run on a
     SAMPLE of probes (here: the 20-probe panel); the ANN variants are
-    the production path. At 100 TB recall evaluation stays this exact
-    shape — fixed probe panel, broadcast probes, corpus never shuffles.
+    the production path. Probes broadcast and the corpus never
+    shuffles, but the top-3 aggregate (``_t3``) buffers every scored
+    candidate of a probe: O(|candidates|) per probe, O(|corpus|) for
+    the truth arm. A bounded top-k-per-group primitive (ROADMAP
+    direction 4) is the fix before this runs at 100 TB.
 
     Measured at sf0.01: IVF(nprobe=4) ≈ 0.65, default
     LSH(5 planes, multi-probe) = 0.40, LSH(8 planes, multi-probe)
@@ -857,29 +883,6 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = base.where(F.col("vec_id") >= 20).select(
         F.col("vec_id").alias("cand_id"), F.col("ed").alias("ce")
     )
-    # r17 (guide §2.4/§5, VERDICT r16 #5): top-3 per group via a sorted-
-    # list aggregate instead of a row_number window — the groupBy rides
-    # the same Exchange the window needed but drops the full partition
-    # sort (the window sorted EVERY candidate per group to keep 3).
-    # Ordering equivalence with the old `cos_sim DESC, cand_id ASC`
-    # window: struct(-cos_sim, cand_id) sorted ascending — double
-    # negation exactly reverses the comparator (incl. -0.0/0.0, which
-    # negation swaps), and cand_id asc is the identical tie-break.
-    def _t3(cond=None):
-        s = F.struct(
-            (-F.col("cos_sim")).alias("nc"), F.col("cand_id").alias("cand_id")
-        )
-        # collect_list drops NULLs, so when(cond, s) collects the
-        # cond-subset in the SAME aggregate pass — no second scan of
-        # the scored rows for the single-probe arm below
-        return F.slice(
-            F.sort_array(
-                F.collect_list(s if cond is None else F.when(cond, s))
-            ),
-            1,
-            3,
-        )
-
     truth = (
         cands.join(F.broadcast(probes))
         .select(

@@ -32,8 +32,9 @@ from slowlog2clickhouse_spark.sources.slowlog import (
     BOOL_METRICS,
     NUMBER_METRICS,
     TIME_METRICS,
+    class_events,
+    is_class_event,
     parse_slowlog,
-    with_fingerprint,
 )
 
 # fixture tests exercise these families (FIXTURES.md §3); the full
@@ -111,6 +112,30 @@ def class_agg_exprs(
     return aggs
 
 
+def _aggregate(events, keys, dims, period, metrics, percentiles, example_tiebreak):
+    # non-class events are dropped here too: callers may pass events
+    # that did not come through class_events
+    return (
+        events.where(is_class_event())
+        .groupBy(*keys, F.date_trunc(period, F.col("ts")).alias("period_start"))
+        .agg(
+            *class_agg_exprs(
+                metrics=metrics,
+                percentiles=percentiles,
+                example_tiebreak=example_tiebreak,
+            )
+        )
+        .withColumns(
+            {
+                **dims,
+                "period_length": F.lit(
+                    {"minute": 60, "hour": 3600, "day": 86400}[period]
+                ).cast("long"),
+            }
+        )
+    )
+
+
 def aggregate_classes(
     events: DataFrame,
     period: str = "minute",
@@ -119,23 +144,8 @@ def aggregate_classes(
     example_tiebreak: str = "record_no",
 ) -> DataFrame:
     """events (+fingerprint/digest) → one row per (digest, period)."""
-    period_len = {"minute": 60, "hour": 3600, "day": 86400}[period]
-    return (
-        # admin-command skip (main.go:~140 [R:M]); unparseable records
-        # (null query) carry no class information either
-        events.where(~F.col("admin") & F.col("query").isNotNull())
-        .groupBy(
-            F.col("digest"),
-            F.date_trunc(period, F.col("ts")).alias("period_start"),
-        )
-        .agg(
-            *class_agg_exprs(
-                metrics=metrics,
-                percentiles=percentiles,
-                example_tiebreak=example_tiebreak,
-            )
-        )
-        .withColumn("period_length", F.lit(period_len).cast("long"))
+    return _aggregate(
+        events, [F.col("digest")], {}, period, metrics, percentiles, example_tiebreak
     )
 
 
@@ -149,25 +159,12 @@ def aggregate_global(
     """Whole-period rollup beside the per-class rows — the reference's
     ``Result.Global`` ([go-mysql] event/global.go [R:H]): same stat
     battery, grouped by period only, digest/fingerprint pinned to the
-    GLOBAL sentinel. Partial aggregation makes this a second cheap pass
-    over the same shuffle keyspace (|periods| rows out)."""
-    period_len = {"minute": 60, "hour": 3600, "day": 86400}[period]
-    exprs = [
-        e
-        for e in class_agg_exprs(
-            metrics=metrics,
-            percentiles=percentiles,
-            example_tiebreak=example_tiebreak,
-        )
-        # fingerprint/db/user/host are per-class dims; meaningless globally
-    ]
-    return (
-        events.where(~F.col("admin") & F.col("query").isNotNull())
-        .groupBy(F.date_trunc(period, F.col("ts")).alias("period_start"))
-        .agg(*exprs)
-        .withColumn("digest", F.lit("GLOBAL"))
-        .withColumn("fingerprint", F.lit("GLOBAL"))
-        .withColumn("period_length", F.lit(period_len).cast("long"))
+    GLOBAL sentinel (db/user/host stay the period's minimum). Partial
+    aggregation makes this a second cheap pass over the same shuffle
+    keyspace (|periods| rows out)."""
+    dims = {"digest": F.lit("GLOBAL"), "fingerprint": F.lit("GLOBAL")}
+    return _aggregate(
+        events, [], dims, period, metrics, percentiles, example_tiebreak
     )
 
 
@@ -185,9 +182,8 @@ def ingest_slowlog(
     default), "routed" (chain + state-machine UDF only on flagged
     rows — what the CLI warning tells a user to re-run with), or
     "python" (state machine everywhere)."""
-    events = with_fingerprint(parse_slowlog(spark, path), mode=fingerprint)
     return aggregate_classes(
-        events,
+        class_events(parse_slowlog(spark, path), mode=fingerprint),
         period=period,
         metrics=metrics,
         percentiles=percentiles,

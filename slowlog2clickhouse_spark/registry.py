@@ -432,7 +432,7 @@ _REWRITE_RESCORE: dict[str, int] = {
     "dedup_simhash": 16,
     "dedup_simhash_accuracy": 16,
     "llm_curation_funnel": 16,
-    "ann_recall_eval": 17,
+    "ann_recall_eval": 18,
     "graph_components_star": 17,
     "dedup_cluster": 17,
     "dedup_keep_best": 17,

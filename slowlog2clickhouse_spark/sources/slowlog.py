@@ -31,7 +31,7 @@ from datetime import datetime, timezone
 from itertools import repeat
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -374,7 +374,9 @@ def parse_slowlog(spark: SparkSession, path: str) -> DataFrame:
 
 
 def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
-    """Attach fingerprint + digest.
+    """Attach fingerprint + digest — the ONLY place that picks the
+    fingerprint path and the digest (``class_events`` is its package
+    entry point; it drops non-class events first).
 
     mode="chain"  — the codegen'd regexp_replace chain (the 100 TB
                     path; default, unchanged behavior).
@@ -388,7 +390,8 @@ def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
                     runs them on every row): the UDF's INPUT is masked
                     to NULL for clean rows, so only flagged payloads
                     cross the Arrow boundary and the source is scanned
-                    ONCE — see routed_fingerprint.
+                    ONCE — see routed_fingerprint. Stateless, so it is
+                    micro-batch safe on streams too.
     mode="python" — every row through the Arrow state machine (the
                     full-fidelity reference semantics, maximum cost).
     """
@@ -400,22 +403,48 @@ def with_fingerprint(events: DataFrame, mode: str = "chain") -> DataFrame:
     )
 
     if mode == "chain":
-        fp = fingerprint_col(F.col("query"))
+        events = events.withColumn("fingerprint", fingerprint_col(F.col("query")))
     elif mode == "python":
-        import pandas as pd
-
         @F.pandas_udf("string")
         def _fp_vec(s: pd.Series) -> pd.Series:
             return s.map(lambda q: fingerprint_py(q) if q is not None else None)
 
-        fp = _fp_vec(F.col("query"))
+        events = events.withColumn("fingerprint", _fp_vec(F.col("query")))
     elif mode == "routed":
-        # masked single-pass, NOT when()/otherwise() — see routed_fingerprint
-        return routed_fingerprint(events, "query", "fingerprint").withColumn(
-            "digest", digest_col(F.col("fingerprint"))
-        )
+        events = routed_fingerprint(events, "query", "fingerprint")
     else:
         raise ValueError(f"unknown fingerprint mode: {mode!r}")
-    return events.withColumn("fingerprint", fp).withColumn(
-        "digest", digest_col(F.col("fingerprint"))
+    return events.withColumn("digest", digest_col(F.col("fingerprint")))
+
+
+def is_class_event() -> Column:
+    """The class-event predicate: the reference aggregator skips
+    administrator commands (main.go:~140 [R:M]), and a record with no
+    statement carries no class either."""
+    return ~F.col("admin") & F.col("query").isNotNull()
+
+
+def class_events(events: DataFrame, mode: str = "chain") -> DataFrame:
+    """Parsed events → class events with fingerprint + digest: the one
+    place that drops non-class events, ahead of ``with_fingerprint``
+    (the optimizer keeps the filter below the routed UDF, so the state
+    machine never sees an admin or statement-less row)."""
+    return with_fingerprint(events.where(is_class_event()), mode)
+
+
+def event_tallies(events: DataFrame) -> DataFrame:
+    """Parsed events → one row of parse-quality counts: events, admin
+    commands, no timestamp, no statement, rate-limited sessions, and
+    records carrying unknown ``# Key:`` pairs."""
+
+    def tally(cond):  # count_if with NULL-as-false (sum of all-NULL is NULL)
+        return F.coalesce(F.sum(cond.cast("long")), F.lit(0))
+
+    return events.agg(
+        F.count("*").alias("n_events"),
+        tally(F.col("admin")).alias("n_admin"),
+        tally(F.col("ts").isNull()).alias("n_no_ts"),
+        tally(F.col("query").isNull()).alias("n_no_query"),
+        tally(F.col("rate_limit") > 1).alias("n_rate_limited"),
+        tally(F.size("extra_metrics") > 0).alias("n_extra_kv"),
     )

@@ -2,9 +2,11 @@
 
 The PMM-agent behavior (continuous slow-log tail → periodic class
 flush, SURVEY.md §2 A8/J [R:L]) as Structured Streaming: the SAME
-parse + fingerprint + class-agg code as plans/pipeline.py, fed by
-``readStream.text`` with the record delimiter — one pipeline
-definition, batch and streaming execution.
+parse stage (``parse_events``) and class-event stage (``class_events``:
+admin/no-statement drop, fingerprint, digest) as the batch pipeline,
+fed by ``readStream.text`` with the record delimiter or by the tail
+data sources — one pipeline definition, batch and streaming
+execution.
 
 Scale: each new log file becomes input splits at record boundaries;
 watermark bounds the per-(digest, minute) state; the production sink
@@ -20,7 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from slowlog2clickhouse_spark.registry import op
-from slowlog2clickhouse_spark.sources.slowlog import RECORD_DELIM, parse_events
+from slowlog2clickhouse_spark.sources.slowlog import (
+    RECORD_DELIM,
+    class_events,
+    parse_events,
+)
 
 _counter = itertools.count()
 
@@ -85,6 +91,33 @@ _STREAM_CLASSES_SQL = f"""
     GROUP BY 1, 2
 """
 
+# the tail ops' oracle = the batch per-digest aggregation over the
+# golden IR: every tail topology (one growing file, a growing fleet,
+# a sharded fleet) must deliver EXACTLY the fixture's events — no
+# loss, duplicate or tear on a grow boundary, no file unclaimed or
+# claimed twice
+_TAIL_CLASSES_SQL = f"""
+    SELECT digest, count(*) AS num_queries,
+           round(sum(query_time), 6) AS qt_sum
+    FROM {_GOLD}
+    WHERE NOT admin AND query IS NOT NULL
+    GROUP BY 1
+    """
+
+
+def _tail_classes(events: DataFrame) -> DataFrame:
+    """Tailed events → per-digest (num_queries, qt_sum), the ending
+    the three tail ops share; routed (state-machine-exact) digests,
+    the same routing as the streaming class stage."""
+    return (
+        class_events(events, "routed")
+        .groupBy("digest")
+        .agg(
+            F.count("*").alias("num_queries"),
+            F.round(F.sum("query_time"), 6).alias("qt_sum"),
+        )
+    )
+
 
 def read_slowlog_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int | None = None
@@ -113,38 +146,24 @@ def stream_classes(events: DataFrame, mode: str = "routed") -> DataFrame:
     """Watermarked 1-minute class aggregation on the parsed stream
     (compact stat set; the full battery is the batch pipeline's).
 
-    Fingerprinting is ROUTED by default (r12 VERDICT #2): the same
-    masked single-pass routing as the batch ingest — clean rows
-    through the codegen'd chain, construct-flagged rows (doubled
-    quotes, multi-line comments, non-ASCII, ...) through the Arrow
-    state machine — so streamed class digests are state-machine-exact,
-    not chain-approximate. Since r14 the routing is ONE stateless
-    projection (UDF input masked to NULL on clean rows — see
-    routed_fingerprint), trivially micro-batch safe: no split/union
-    topology exists to re-align, and the all-clean micro-batch pays
-    no second source pass (the r13 split+union form's measured 25%
-    drain tax). Pinned under live streaming execution by
-    tests/test_streaming.py::
+    Class events come from the batch pipeline's ``class_events``: the
+    same admin/no-statement drop and the same ``with_fingerprint``
+    dispatch, so ``mode`` means what it means there. It is ROUTED by
+    default (r12 VERDICT #2): clean rows through the codegen'd chain,
+    construct-flagged rows (doubled quotes, multi-line comments,
+    non-ASCII, ...) through the Arrow state machine — so streamed
+    class digests are state-machine-exact, not chain-approximate. The
+    routing is ONE stateless masked projection (r14), trivially
+    micro-batch safe: no split/union topology exists to re-align, and
+    the all-clean micro-batch pays no second source pass. Pinned under
+    live streaming execution by tests/test_streaming.py::
     test_stream_classes_routed_inside_microbatch_equals_routed_batch,
     which drives the adversarial corpus through THIS function as the
     running streaming query. ``mode="chain"`` keeps the pure codegen
     path for pipelines that accept chain-approximate digests."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        fingerprint_col,
-        routed_fingerprint,
-    )
-
-    if mode not in ("routed", "chain"):
-        raise ValueError(f"stream_classes mode must be 'routed' or 'chain', got {mode!r}")
-    ev = events.where(~F.col("admin") & F.col("query").isNotNull())
-    if mode == "routed":
-        ev = routed_fingerprint(ev, "query", "fingerprint")
-    else:
-        ev = ev.withColumn("fingerprint", fingerprint_col(F.col("query")))
-    ev = ev.withColumn("digest", digest_col(F.col("fingerprint")))
     return (
-        ev.withWatermark("ts", "5 minutes")
+        class_events(events, mode)
+        .withWatermark("ts", "5 minutes")
         .groupBy(F.window("ts", "1 minute").alias("w"), F.col("digest"))
         .agg(
             F.count("*").alias("num_queries"),
@@ -506,10 +525,6 @@ def run_pctl_merge_stream(
     switch; rerunning without it resumes from the checkpoint.
     ``retain`` bounds the committed state parts kept on disk (see
     merge_pctl_partial's GC)."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import (
         FIXTURE_LOG,
         qt_hist_bucket,
@@ -524,18 +539,12 @@ def run_pctl_merge_stream(
             with open(f"{src}/rot{i}.log", "w") as f:
                 f.write(txt[bounds[i] : bounds[i + 1]])
 
+    # routed (state-machine-exact) digests on the stream path too
     events = read_slowlog_stream(spark, src, max_files_per_trigger=1)
-    ev = events.where(
-        ~F.col("admin")
-        & F.col("query").isNotNull()
-        & F.col("query_time").isNotNull()
-    )
-    # routed (state-machine-exact) digests on the stream path too —
-    # one stateless masked projection, micro-batch safe (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint").select(
-        digest_col(F.col("fingerprint")).alias("digest"),
-        qt_hist_bucket().alias("bucket"),
+    ev = (
+        class_events(events, "routed")
+        .where(F.col("query_time").isNotNull())
+        .select("digest", qt_hist_bucket().alias("bucket"))
     )
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -555,16 +564,7 @@ def run_pctl_merge_stream(
 
 @op(
     "stream_slowlog_tail",
-    # oracle = the batch class aggregation over the same golden IR:
-    # the tail reader must deliver EXACTLY the fixture's events across
-    # its incremental reads (torn-tail record flushed by the sentinel)
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail ONE GROWING slow-log file — the reference's actual
@@ -584,10 +584,6 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     and carries no statement), drain again — then classes the tailed
     events. A hash match against the golden IR proves no event was
     lost, duplicated, or torn across the grow boundary."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -619,30 +615,12 @@ def stream_slowlog_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    ev = spark.table(name).where(~F.col("admin") & F.col("query").isNotNull())
-    # routed (state-machine-exact) digests for tailed events too —
-    # the same masked single-pass routing as batch ingest (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(spark.table(name))
 
 
 @op(
     "stream_slowlog_tail_multi",
-    # oracle = the same batch class aggregation over the golden IR:
-    # the FLEET tail (two concurrently-growing files) must deliver
-    # exactly the fixture's events — no loss, dup, or tear on either
-    # file's grow boundary, and the union must re-assemble the corpus
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail a FLEET of growing slow-log files — many mysqlds, one
@@ -678,10 +656,6 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection itself (see MULTI_EVENT_SCHEMA), so idempotent sinks
     have a structural key — unlike the single-file tail whose
     record_no is a never-resetting ordinal."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -718,31 +692,12 @@ def stream_slowlog_tail_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.processAllAvailable()
     finally:
         q.stop()
-    ev = spark.table(name).where(~F.col("admin") & F.col("query").isNotNull())
-    # routed (state-machine-exact) digests for tailed events too —
-    # the same masked single-pass routing as batch ingest (r12 VERDICT
-    # #2; single-pass form since r14)
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(spark.table(name))
 
 
 @op(
     "stream_slowlog_tail_sharded",
-    # oracle = the same batch class aggregation over the golden IR as
-    # the other tail ops: the SHARDED fleet (two independent streams
-    # over disjoint hash-slices of the same log directory) must
-    # re-assemble the corpus exactly — no file unclaimed, none claimed
-    # twice, no loss or tear inside either shard
-    oracle=f"""
-    SELECT digest, count(*) AS num_queries,
-           round(sum(query_time), 6) AS qt_sum
-    FROM {_GOLD}
-    WHERE NOT admin AND query IS NOT NULL
-    GROUP BY 1
-    """,
+    oracle=_TAIL_CLASSES_SQL,
 )
 def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fleet-width SCALE-OUT shape on the driver-checked record
@@ -774,10 +729,6 @@ def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     __init__), pinned by tests/test_streaming.py
     test_multi_tail_reshard_{contract,real_checkpoints,any_width}
     (r14 VERDICT #6)."""
-    from slowlog2clickhouse_spark.functions.fingerprint import (
-        digest_col,
-        routed_fingerprint,
-    )
     from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG, _TMP
     from slowlog2clickhouse_spark.sources.slowlog_datasource import register
 
@@ -819,12 +770,7 @@ def stream_slowlog_tail_sharded(spark: SparkSession, sf_dir: str) -> DataFrame:
     for name in names:
         t = spark.table(name)
         union = t if union is None else union.unionByName(t)
-    ev = union.where(~F.col("admin") & F.col("query").isNotNull())
-    ev = routed_fingerprint(ev, "query", "fingerprint")
-    return ev.groupBy(digest_col(F.col("fingerprint")).alias("digest")).agg(
-        F.count("*").alias("num_queries"),
-        F.round(F.sum("query_time"), 6).alias("qt_sum"),
-    )
+    return _tail_classes(union)
 
 
 # The structural idempotency key of the multi-tail source: unique per

@@ -315,6 +315,31 @@ def test_llm_curation_funnel_exchange_budget(plans):
     assert _n_nodes(plans["llm_curation_funnel"], "Exchange") <= 16
 
 
+def test_routed_ingest_drops_class_events_below_the_udf(spark):
+    """The class-event stage (``class_events``) filters admin and
+    statement-less rows ONCE, and the optimizer keeps that Filter below
+    ArrowEvalPython: the routed state-machine UDF never sees those rows,
+    and aggregate_classes' own copy of the predicate adds no second
+    Filter."""
+    from slowlog2clickhouse_spark.operators.slowlog_ops import FIXTURE_LOG
+    from slowlog2clickhouse_spark.plans.pipeline import ingest_slowlog
+
+    df = ingest_slowlog(spark, FIXTURE_LOG, fingerprint="routed")
+    found = []
+
+    def walk(node, above):
+        name = node.nodeName()
+        if name == "Filter" and "admin" in node.condition().toString():
+            found.append(above)
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), above + [name])
+
+    walk(df._jdf.queryExecution().sparkPlan(), [])
+    assert len(found) == 1, f"{len(found)} admin/query Filters"
+    assert "ArrowEvalPython" in found[0], found[0]
+
+
 def test_parquet_scans_prune_columns(plans):
     """Every lazy op that scans lineitem must NOT read all 11 columns
     unless it genuinely projects them (spot-check: ops over lineitem

@@ -959,3 +959,60 @@ def test_one_record_path_in_package():
                 if isinstance(value, str) and "# Time: " in value:
                     bad.append(f"{where} hard-codes the delimiter")
     assert not bad, bad
+
+
+def _spark_expr_admin_refs(tree) -> list[int]:
+    """Lines where a module names the ``admin`` column in a Spark
+    expression: ``F.col("admin")``-style column references, and SQL
+    fragments handed to ``expr``/``where``/``filter``/``selectExpr``/
+    ``sql``. DuckDB oracle strings (``@op(oracle=...)``) are neither."""
+    import ast
+    import re
+
+    sql_calls = {"expr", "where", "filter", "selectExpr", "sql"}
+    lines = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        for arg in [*node.args, *(k.value for k in node.keywords)]:
+            if not (isinstance(arg, ast.Constant) and isinstance(arg.value, str)):
+                continue
+            if name in ("col", "column") and arg.value == "admin":
+                lines.append(node.lineno)
+            elif name in sql_calls and re.search(r"\badmin\b", arg.value):
+                lines.append(node.lineno)
+    return lines
+
+
+def test_one_class_event_stage_in_package():
+    """Structural pin: what a class event is — no admin command, a
+    statement present — is spelled in sources/slowlog.py alone
+    (``is_class_event``/``class_events``), and the routed fingerprint
+    is picked only by ``with_fingerprint`` there. The one other
+    ``routed_fingerprint`` caller is the fingerprint-corpus op in
+    operators/udfs.py, which has no events to class."""
+    import ast
+    import pathlib
+
+    import slowlog2clickhouse_spark
+
+    root = pathlib.Path(slowlog2clickhouse_spark.__file__).parent
+    core = root / "sources" / "slowlog.py"
+    routed_ok = {core, root / "operators" / "udfs.py"}
+    bad = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(encoding="utf-8"))
+        rel = path.relative_to(root)
+        if path != core:
+            bad += [f"{rel}:{n} names admin" for n in _spark_expr_admin_refs(tree)]
+        if path not in routed_ok:
+            bad += [
+                f"{rel}:{node.lineno} calls routed_fingerprint"
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and "routed_fingerprint"
+                in (getattr(node.func, "id", None), getattr(node.func, "attr", None))
+            ]
+    assert not bad, bad

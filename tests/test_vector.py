@@ -132,6 +132,49 @@ def test_ann_recall_eval_bounds_and_truth_size(spark, sf_dir):
     assert rows["ivf"]["recall"] >= rows["lsh"]["recall"]
 
 
+def test_t3_matches_the_row_number_window_order(spark):
+    """ann_recall_eval's sorted-list top-3 (``_t3``) ranks exactly like
+    the window it replaced, ``row_number() OVER (ORDER BY cos_sim DESC,
+    cand_id ASC) <= 3``: NaN first, NULL last, -0.0 tied with 0.0, ties
+    broken by cand_id — with and without the ``cond`` subset."""
+    from slowlog2clickhouse_spark.operators.vector import _t3
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, 1, None), (1, 2, 0.5), (1, 3, 0.5), (1, 4, nan), (1, 5, 1.0),
+        (2, 5, 0.0), (2, 4, -0.0), (2, 6, 0.0), (2, 7, None), (2, 8, 0.0),
+        (3, 1, None), (3, 2, None), (3, 3, -0.2),
+        (4, 9, nan), (4, 8, nan), (4, 7, inf), (4, 6, -inf),
+        (5, 2, None), (5, 4, None), (5, 3, -0.0),
+    ]
+    df = spark.createDataFrame(rows, "g int, cand_id int, cos_sim double")
+    even = F.col("cand_id") % 2 == 0
+
+    def window_top3(d):
+        w = W.partitionBy("g").orderBy(F.col("cos_sim").desc(), F.col("cand_id").asc())
+        ranked = d.withColumn("rn", F.row_number().over(w)).where("rn <= 3")
+        return {
+            g: [c for _, c in sorted(v)]
+            for g, v in ranked.groupBy("g")
+            .agg(F.collect_list(F.struct("rn", "cand_id")).alias("v"))
+            .collect()
+        }
+
+    got = {
+        r["g"]: r
+        for r in df.groupBy("g")
+        .agg(_t3().alias("top"), _t3(even).alias("top_even"))
+        .select("g", "top.cand_id", F.col("top_even.cand_id").alias("even"))
+        .collect()
+    }
+    assert {g: r["cand_id"] for g, r in got.items()} == window_top3(df)
+    assert {g: r["even"] for g, r in got.items() if r["even"]} == window_top3(
+        df.where(even)
+    )
+    assert got[1]["cand_id"] == [4, 5, 2]  # NaN, 1.0, then the 0.5 tie
+    assert got[3]["cand_id"] == [3, 1, 2]  # NULLs rank last
+
+
 def test_nprobe_sweep_recall_is_monotone_in_nprobe(spark, sf_dir):
     rows = sorted(
         OPS["ann_nprobe_sweep"].fn(spark, sf_dir).collect(),
